@@ -179,16 +179,19 @@ class DBSCAN(Base):
         from cuml_spark.core.session import ensure_parallelism
 
         # several downstream jobs (degree counts, per-cell clustering, the
-        # two quotient-graph collects) all read this cache — spread it across
-        # cores first (no-op when the scan already yields enough splits)
+        # two quotient-graph collects) all read this frame — spread it across
+        # cores first (no-op when the scan already yields enough splits).
+        # The frames reused across this call's jobs are local checkpoints,
+        # not cache-manager entries, so a later fit over the same input
+        # recomputes instead of reading this call's blocks.
         pts = ensure_parallelism(
             df.select(
                 F.col(id_col).alias("pid"),
                 F.array(*[F.col(c).cast("double") for c in cols]).alias("x"),
             )
-        ).cache()
+        ).localCheckpoint(eager=False)
 
-        core_flags = self._core_flags(pts, len(cols)).cache()
+        core_flags = self._core_flags(pts, len(cols)).localCheckpoint(eager=False)
         blocks = self._blocks(pts.join(core_flags, "pid"), len(cols))
         # group cells into hash buckets: one python invocation per bucket
         # (cells cluster independently inside _local_cluster), so UDF call
@@ -214,7 +217,7 @@ class DBSCAN(Base):
                 lambda pdf: _local_cluster(pdf, eps, max_cell),
                 "pid long, comp_key string, kind string",
             )
-            .cache()
+            .localCheckpoint(eager=False)
         )
 
         # quotient graph: a core point in several blocks glues its components

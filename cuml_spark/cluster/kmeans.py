@@ -148,20 +148,32 @@ class KMeans(Base):
         """Sum of squared distances to the nearest center (kmeans.pyx:574).
         The MLlib path sets it eagerly from the training summary; the
         explicit-init Lloyd path computes it LAZILY on first access (one
-        aggregate over the fit frame — r13).  A Lloyd model pickled before
-        the first access loses the pending frame (Base strips DataFrames)
-        and reports None, matching every other stripped runtime handle."""
-        if self._inertia is None:
+        aggregate over the fit frame — r13); pickling and ``save``
+        materialize it first, so a persisted model keeps the value."""
+        if getattr(self, "_inertia", None) is None:
             pending = _INERTIA_PENDING.pop(self, None)
             if pending is not None:
                 data, cols = pending
                 self._inertia = -self.score(data, cols)
-        return self._inertia
+        return getattr(self, "_inertia", None)
 
     @inertia_.setter
     def inertia_(self, v) -> None:
         self._inertia = v
         _INERTIA_PENDING.pop(self, None)
+
+    def __getstate__(self) -> dict:
+        # the pending fit frame is not picklable state: resolve the lazy
+        # inertia now (``save`` pickles through here too) or it is lost
+        self.inertia_
+        return super().__getstate__()
+
+    def __setstate__(self, state: dict) -> None:
+        # pickles from before the lazy inertia carry it as ``inertia_``,
+        # which the property would shadow
+        if "inertia_" in state:
+            state["_inertia"] = state.pop("inertia_")
+        super().__setstate__(state)
 
     # -- scoring expressions over broadcast centers (no shuffle) ------------
     def _sq_dist_expr(self, center: np.ndarray, cols: list[str]) -> Column:
@@ -172,16 +184,17 @@ class KMeans(Base):
 
     @staticmethod
     def _argmin_expr(dists: list[Column]) -> Column:
-        """Index of the smallest distance, ties to the LOWEST cluster id
-        (strict `<` scan) — the single tie-break definition shared by the
-        literal and broadcast-relation assignment forms."""
-        best = F.lit(0)
-        best_d = dists[0]
-        for i in range(1, len(dists)):
-            cond = dists[i] < best_d
-            best = F.when(cond, F.lit(i)).otherwise(best)
-            best_d = F.when(cond, dists[i]).otherwise(best_d)
-        return best
+        """Index of the smallest distance, ties to the LOWEST cluster id:
+        ``least`` over (distance, id) structs orders by distance, then id.
+        One flat expression, linear in k — a running-minimum ``when`` chain
+        nests every earlier distance into each later comparison and
+        doubles per center, past the JVM's 64 KB method limit at k = 8."""
+        if len(dists) == 1:  # least() takes at least two arguments
+            return F.lit(0)
+        return F.least(*[
+            F.struct(d.alias("d"), F.lit(i).alias("i"))
+            for i, d in enumerate(dists)
+        ])["i"]
 
     def predict(self, df: DataFrame, feature_cols: list[str] | None = None,
                 out_col: str = "label") -> DataFrame:

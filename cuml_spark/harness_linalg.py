@@ -138,11 +138,11 @@ def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    ).cache()
+    ).localCheckpoint(eager=False)
     q = emb.filter(F.col("vec_id") % 100 == 0)
     brute = knn_join(emb, q, k=10)
     # brute-force truth, the LSH fit+probe, and the query count are
-    # independent chains over the (warm-rep-cached) embeddings — overlap
+    # independent chains over the checkpointed embeddings — overlap
     # them (guide §2.6; results identical, r12)
     from cuml_spark.core.session import run_overlapped
 
@@ -174,11 +174,9 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins are pair-first).  DuckDB replays the shingling with a lateral
     generate_series and the candidate set with the same banded-minhash SQL
     that backs ``lsh_pairs``."""
-    from cuml_spark.harness_text import jaccard_pairs_cached
+    from cuml_spark.harness_text import jaccard_pairs
 
-    # verified pairs computed once per (session, sf_dir) — shared with
-    # text_neardup_groups (one pipeline, two reported stages)
-    out = jaccard_pairs_cached(spark, sf_dir)
+    out = jaccard_pairs(spark, sf_dir)
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 

@@ -20,7 +20,7 @@ def _sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.filter(F.col("vec_id") % 10 == 0).select(
         F.col("vec_id").alias("pid"),
         F.col("embedding").cast("array<double>").alias("x"),
-    ).cache()
+    ).localCheckpoint(eager=False)  # the fit, trust and count all read it
 
 
 _SQL_TRUST = (

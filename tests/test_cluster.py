@@ -93,3 +93,78 @@ def test_kmeans_size_tiers(spark, n):
     want = sorted((n + 2) // 3 if g < n % 3 or n % 3 == 0 else n // 3
                   for g in range(3))
     assert sizes == sorted([n - 2 * (n // 3), n // 3, n // 3]) or sizes == want
+
+
+def test_kmeans_assignment_expression_is_linear_and_ties_low(spark):
+    """The nearest-center expression grows linearly with k (a nested
+    running-minimum form doubles per center and overflows the JVM method
+    limit at k = 8), and exact ties go to the lowest cluster id."""
+    from pyspark.sql import functions as F
+
+    def n_nodes(k: int) -> int:
+        km = KMeans(n_clusters=k)
+        cents = np.zeros((k, 2))
+        dists = [km._sq_dist_expr(c, ["x", "y"]) for c in cents]
+        plan = spark.range(1).select(
+            F.lit(0.0).alias("x"), F.lit(0.0).alias("y")
+        ).select(km._argmin_expr(dists).alias("label"))
+        proj = plan._jdf.queryExecution().analyzed().expressions()
+        return len(proj.head().treeString().splitlines())
+
+    # linear: doubling k about doubles the tree (checked at k = 8 before
+    # k = 16 is built, so an exponential form fails fast)
+    n4, n8 = n_nodes(4), n_nodes(8)
+    assert n8 <= 2 * n4 + 8
+    assert n_nodes(16) <= 2 * n8 + 8
+
+    # 16 centers on a 4×4 grid of spacing 2; half-integer points sit on
+    # exact ties between 2 or 4 centers (all squares are exact in float64)
+    centers = np.array([[2.0 * (i % 4), 2.0 * (i // 4)] for i in range(16)])
+    grid = np.arange(0.0, 7.5, 0.5)
+    pts = np.array([[x, y] for x in grid for y in grid])
+    df = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(pts)],
+        "pid long, x double, y double",
+    )
+    km = KMeans(n_clusters=16, init_centers=centers)
+    km.cluster_centers_ = centers
+    km._cols = ["x", "y"]
+    got = {r["pid"]: r["label"] for r in km.predict(df).collect()}
+    d = ((pts[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
+    want = np.argmin(d, axis=1)  # first minimum = lowest id on ties
+    assert (d == d.min(axis=1, keepdims=True)).sum(axis=1).max() == 4
+    assert [got[i] for i in range(len(pts))] == want.tolist()
+
+
+def _lloyd(blobs):
+    return KMeans(n_clusters=3, init_centers=CENTERS, max_iter=3).fit(
+        blobs, ["f0", "f1"])
+
+
+def test_kmeans_pickle_keeps_pending_inertia(blobs, tmp_path):
+    """The explicit-init fit defers inertia_; pickling or saving before the
+    first access must still carry the value."""
+    import pickle
+
+    km = _lloyd(blobs)
+    expected = -km.score(blobs, ["f0", "f1"])
+    loaded = pickle.loads(pickle.dumps(_lloyd(blobs)))
+    assert loaded.inertia_ == pytest.approx(expected, rel=1e-9)
+    km2 = _lloyd(blobs)
+    km2.save(str(tmp_path / "km"))
+    assert KMeans.load(str(tmp_path / "km")).inertia_ == pytest.approx(
+        expected, rel=1e-9)
+
+
+def test_kmeans_legacy_pickle_state_loads(blobs):
+    """Pickles from before the lazy inertia stored it as ``inertia_``; one
+    with neither key still loads and reports None."""
+    state = _lloyd(blobs).__getstate__()
+    value = state.pop("_inertia")
+    legacy = KMeans.__new__(KMeans)
+    legacy.__setstate__(dict(state, inertia_=value))
+    assert legacy.inertia_ == value
+    bare = KMeans.__new__(KMeans)
+    bare.__setstate__(dict(state))
+    assert bare.inertia_ is None
+    assert bare.predict(blobs.limit(5)).count() == 5

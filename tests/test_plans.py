@@ -178,8 +178,11 @@ def test_right_size_coalesces_small_and_passes_large(spark):
     a no-op on a 100 TB input."""
     from cuml_spark.core.session import ensure_parallelism, right_size
 
+    # min_parts pinned so the property holds on any core count (the
+    # default follows the host's parallelism, which may already be 4)
     small = ensure_parallelism(
-        spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
+        spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet"),
+        min_parts=32,
     )
     before = small.rdd.getNumPartitions()
     after = right_size(small).rdd.getNumPartitions()
