@@ -60,8 +60,7 @@ class SpeedupComparisonRunner:
         else:
             raise ValueError(f"unknown dataset {self.dataset_name!r}")
         cols = [f"f{j}" for j in range(n_features)]
-        df = df.cache()
-        df.count()
+        df = df.localCheckpoint()
         pdf = df.toPandas()
         X = pdf[cols].to_numpy(dtype=np.float64)
         y = pdf[label].to_numpy(dtype=np.float64)
@@ -96,7 +95,6 @@ class SpeedupComparisonRunner:
         self._augment(row, algo_pair, result, baseline, X, y)
         if verbose:
             print(row)
-        df.unpersist()
         return row
 
     def _augment(self, row, algo_pair, result, baseline, X, y):

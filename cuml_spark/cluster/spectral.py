@@ -146,12 +146,12 @@ class SpectralClustering(Base):
         ecols = [f"se{j}" for j in range(self.n_components)]
         # NJW row normalization as a pure expression
         nrm = F.sqrt(sum(F.col(c) * F.col(c) for c in ecols) + F.lit(1e-12))
-        # cache: KMeans iterates over this frame many times — without the
-        # cache every Lloyd round re-runs the Nyström extension UDF / KNN
+        # checkpoint: KMeans iterates over this frame many times — without
+        # it every Lloyd round re-runs the Nyström extension UDF / KNN
         # pipeline upstream
         normed = emb.select(
             id_col, *[(F.col(c) / nrm).alias(c) for c in ecols]
-        ).cache()
+        ).localCheckpoint(eager=False)
         from cuml_spark.cluster.kmeans import KMeans
 
         km = KMeans(n_clusters=self.n_clusters, random_state=self.random_state,

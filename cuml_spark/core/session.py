@@ -4,7 +4,7 @@ cuML's ``cuml.Handle`` (reference: python/cuml/common/handle.pyx:32-72) owns the
 CUDA stream and allocators; the Spark-native analog is simply the SparkSession
 plus its config.  The defaults below are what we want on a real cluster too:
 AQE on (runtime re-planning + skew-join handling), Arrow on (every
-pandas-UDF hop is Arrow-batched), sensible shuffle parallelism for local[32].
+pandas-UDF hop is Arrow-batched), shuffle parallelism matched to the cores.
 """
 
 from __future__ import annotations
@@ -19,8 +19,10 @@ def get_spark(app_name: str = "cuml_spark", shuffle_partitions: int | None = Non
 
     On a real cluster most of these are cluster-conf; setting them here is
     harmless (existing session wins) and makes local runs representative.
+    The core count is ``$SPARK_GRAFT_CPUS``, else the CPUs this process may
+    run on.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (

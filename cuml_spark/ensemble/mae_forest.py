@@ -201,15 +201,6 @@ class MAERandomForestRegressor(Base):
             y_edges: list[float] | None = None,
             bag_cols: list[str] | None = None,
             bootstrap: bool = True) -> "MAERandomForestRegressor":
-        import os as _os
-        import time as _time
-        _prof = _os.environ.get("CUML_SPARK_PROFILE") == "1"
-        _t0 = _time.time()
-
-        def _mark(tag: str) -> None:
-            if _prof:
-                print(f"[mae_forest] {tag}: +{_time.time() - _t0:.3f}s")
-
         cols = list(feature_cols)
         extra_bag = [c for c in (bag_cols or []) if c not in cols]
         data = df.select(
@@ -227,7 +218,6 @@ class MAERandomForestRegressor(Base):
             feature_edges = [_quantile_edges(data, c, self.n_bins) for c in cols]
         elif y_edges is None:
             y_edges = _quantile_edges(data, "__y", self.n_y_bins)
-        _mark("edges")
         self.feature_edges_ = feature_edges
         self._cols = cols
 
@@ -261,10 +251,8 @@ class MAERandomForestRegressor(Base):
         # (cuML bootstrap default) maps to the bootstrap's expected unique
         # fraction 1−1/e ≈ 0.632 — without per-tree subsampling every tree
         # would see identical data and the ensemble would degenerate to one
-        # tree.  This base frame is cached ONCE and never rewritten: each
-        # level recomputes node routing from the (broadcast) tree state
-        # inside the aggregation job itself, so a level costs exactly one
-        # shuffle and the driver only ever holds bounded histograms.
+        # tree.  A level costs exactly one shuffle and the driver only ever
+        # holds bounded histograms.
         trees = F.array(*[F.lit(t) for t in range(self.n_estimators)])
         rows = binned.select("*", F.explode(trees).alias("__tree"))
         frac = self.rows_sample if self.rows_sample < 1.0 else 0.632
@@ -274,32 +262,25 @@ class MAERandomForestRegressor(Base):
             )
         # __node is MAINTAINED as a materialized column: each level appends
         # only that level's split updates (a when-chain over the nodes that
-        # actually split) and re-caches, so no level ever re-analyzes a
-        # routing expression proportional to the whole forest — Catalyst
-        # plan-comparison cost against a full session CacheManager made the
-        # recompute-from-scratch router ~2× slower in long sessions, and
-        # keeping the chain lazy is WORSE still: projection collapse
-        # substitutes each level's CASE into every __node reference of the
-        # next level's conditions, so the analyzed expression grows as the
-        # PRODUCT of per-level branch counts (measured r7: +1.2s at level 3
-        # of a 4-tree depth-4 fit — more than the 3 cache passes it saved)
+        # actually split) and re-checkpoints, so no level ever re-analyzes a
+        # routing expression proportional to the whole forest.  Keeping the
+        # chain lazy is worse: projection collapse substitutes each level's
+        # CASE into every __node reference of the next level's conditions,
+        # so the analyzed expression grows as the PRODUCT of per-level
+        # branch counts (measured r7: +1.2s at level 3 of a 4-tree depth-4
+        # fit — more than the 3 materializations it saved)
         rows = rows.select(
             *fb_cols, "__yb", "__y", "__tree"
         ).withColumn("__node", F.lit(0).cast("int"))
-        # right-size the cached working set: the level jobs are pure JVM
+        # right-size the materialized working set: the level jobs are pure JVM
         # aggregations, so a tiny frame sliced into defaultParallelism
         # partitions pays ~2·parts task overheads per level for no gain
         # (interleaved A/B at sf0.1: median fit 2.11s → 1.63s).  See
         # core.session.right_size for the sizing rule and the 100 TB
         # no-op guarantee.
-        if not _os.environ.get("CUML_MAE_NO_COALESCE"):
-            rows = right_size(rows)
-        rows = rows.cache()
-        # exactly ONE upstream cache is live at a time: the base frame, or
-        # the newest materialized level frame once the lazy-chain bound is
-        # crossed; a superseded cache dies right after the next hist job
-        # (its last consumer) via prev_rows
-        live_cache = rows
+        # the first level's job fills the checkpoint; every later level reads
+        # its blocks instead of re-running the explode and bagging filter
+        rows = right_size(rows).localCheckpoint(eager=False)
 
         min_leaf = self.min_samples_leaf
         depth = self.max_depth
@@ -364,7 +345,6 @@ class MAERandomForestRegressor(Base):
         feat_arr = F.array(*[F.col(c) for c in fb_cols])
         m_features = _resolve_m_features(self.max_features, len(cols))
         spark = df.sparkSession
-        prev_rows = None
         for _level in range(depth):
             if open_nodes is not None and not open_nodes:
                 break
@@ -450,13 +430,6 @@ class MAERandomForestRegressor(Base):
                 splits = hist_df.groupBy("__tree", "__node", "__feat").applyInPandas(
                     reducer, "t long, nd long, ft long, score double, bin long"
                 ).collect()
-            _mark(f"level{_level} hist+select ({len(splits)} split rows, "
-                  f"driver_path={driver_path})")
-            # the hist job above materialized the current rows cache — the
-            # previous level's frame is no longer referenced by any plan
-            if prev_rows is not None:
-                prev_rows.unpersist()
-                prev_rows = None
             by_node: dict[tuple[int, int], tuple] = {}
             for r in sorted(splits, key=lambda r: (r["t"], r["nd"], r["ft"])):
                 t, nd, ft = r["t"], r["nd"], r["ft"]
@@ -475,19 +448,15 @@ class MAERandomForestRegressor(Base):
             # wide level (>4096 splits) falls back to the Arrow recompute
             # router so the CaseWhen never exceeds codegen limits.  The
             # final level's frame has exactly one consumer (the leaf job) —
-            # caching it would pay a materialization pass for nothing.
+            # checkpointing it would pay a materialization pass for nothing.
             last_level = _level == depth - 1
             if len(by_node) <= 4096:
                 routed = rows.withColumn("__node", level_update(by_node))
             else:
                 routed = rows.withColumn(
                     "__node", router()("__tree", *fb_cols))
-            if last_level:
-                rows = routed  # sole consumer is the leaf job — don't cache
-            else:
-                prev_rows = live_cache
-                rows = routed.cache()
-                live_cache = rows
+            # sole consumer of the last level is the leaf job — don't materialize
+            rows = routed if last_level else routed.localCheckpoint(eager=False)
 
         # leaf medians — the MAE-optimal constant per leaf.  __node already
         # points at the leaves (maintained through the level loop).
@@ -502,10 +471,6 @@ class MAERandomForestRegressor(Base):
             nd = r["__node"]
             if nd not in trees_state[r["__tree"]]:
                 trees_state[r["__tree"]][nd] = float(r["v"])
-        _mark("leaves")
-        if prev_rows is not None:
-            prev_rows.unpersist()
-        live_cache.unpersist()
         self.trees_ = trees_state
         return self
 

@@ -1905,6 +1905,44 @@ FROM p
 # chunk_id is bounded by tokens/stride (synthetic docs are ~50 tokens;
 # the key space leaves room up to 100k chunks per doc regardless)
 _CHUNK_KEY_MULT = 100_000
+# the hybrid pipeline's chunk geometry: ONE definition read by the Spark
+# chunker, the closed-form chunk stats and the oracle SQL
+_CHUNK_TOKENS = 40
+_CHUNK_OVERLAP = 8
+_CHUNK_STEP = _CHUNK_TOKENS - _CHUNK_OVERLAP
+
+
+def _hybrid_chunk_stats(docs: DataFrame) -> DataFrame:
+    """One-row (``__n``, ``__avgdl``) BM25 corpus stats of
+    ``chunk_documents(docs, _CHUNK_TOKENS, overlap=_CHUNK_OVERLAP)``
+    WITHOUT a chunk pass (r13; the r12 plan ran the full
+    Scan→repartition→posexplode→slice chunk subtree TWICE — once inside
+    the checkpointed postings, once for this (count, avgdl) aggregate).
+    With stride chunking every chunk but a doc's last is exactly
+    T = _CHUNK_TOKENS tokens, so with n = the doc's token count (same
+    tokenizer as chunk_documents), O = _CHUNK_OVERLAP, S = _CHUNK_STEP:
+      chunks(n)  c = floor((greatest(n-O, 1) - 1) / S) + 1
+      Σ chunk dl   = n + O·(c - 1)        (T·(c-1) + last = n - S·(c-1))
+    Both corpus totals are exact integers < 2^53, so the final division
+    is order-independent and bit-identical to the aggregate it replaces
+    (avg of small-int dl sums exactly in double); docs with n = 0 emit
+    no chunks in both forms.  One split+size pass over the corpus — no
+    explode, no slice, no re-join."""
+    from cuml_spark.text.lm import _token_array
+
+    n = F.size(_token_array("text", " "))
+    c = (F.floor((F.greatest(n - _CHUNK_OVERLAP, F.lit(1)) - 1) / _CHUNK_STEP)
+         + 1).cast("long")
+    return (
+        docs.select(n.alias("__nt"), c.alias("__nc"))
+        .filter(F.col("__nt") >= 1)
+        .agg(
+            F.sum("__nc").alias("__n"),
+            F.sum(F.col("__nt") + _CHUNK_OVERLAP * (F.col("__nc") - 1))
+            .alias("__sd"),
+        )
+        .select("__n", (F.col("__sd") / F.col("__n")).alias("__avgdl"))
+    )
 
 
 def q_pipeline_retrieval_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1922,45 +1960,19 @@ def q_pipeline_retrieval_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cuml_spark.core.session import ensure_parallelism
     from cuml_spark.text.retrieval import bm25_topk, chunk_documents, rrf_fuse
 
-    from cuml_spark.text.lm import _token_array
-
     raw = _t(spark, sf_dir, "documents")
     docs = ensure_parallelism(raw)
     emb = _t(spark, sf_dir, "embeddings")
-    chunks = chunk_documents(docs, 40, overlap=8)
+    chunks = chunk_documents(docs, _CHUNK_TOKENS, overlap=_CHUNK_OVERLAP)
     chunk_docs = chunks.select(
         (F.col("doc_id") * _CHUNK_KEY_MULT + F.col("chunk_id")).alias("ck"),
         F.col("chunk_text").alias("text"),
     )
     qs = raw.filter(F.col("doc_id") < 4).select(
         F.col("doc_id").alias("query_id"), "text")
-    # chunk-corpus BM25 stats WITHOUT a second chunk pass (r13; the r12
-    # plan ran the full Scan→repartition→posexplode→slice chunk subtree
-    # TWICE — once inside the checkpointed postings, once for this
-    # (count, avgdl) aggregate).  For stride chunking (max_tokens=40,
-    # step=32) every chunk but a doc's last is exactly 40 tokens, so with
-    # n = the doc's token count (same tokenizer as chunk_documents):
-    #   chunks(n)  c = floor((greatest(n-8, 1) - 1) / 32) + 1
-    #   Σ chunk dl   = n + 8·(c - 1)        (40·(c-1) + last = n - 32·(c-1))
-    # Both corpus totals are exact integers < 2^53, so the final division
-    # is order-independent and bit-identical to the aggregate it replaces
-    # (avg of small-int dl sums exactly in double); docs with n = 0 emit
-    # no chunks in both forms.  One split+size pass over the corpus — no
-    # explode, no slice, no re-join.
-    _n = F.size(_token_array("text", " "))
-    _c = (F.floor((F.greatest(_n - 8, F.lit(1)) - 1) / 32) + 1).cast("long")
-    chunk_stats = (
-        docs.select(_n.alias("__nt"), _c.alias("__nc"))
-        .filter(F.col("__nt") >= 1)
-        .agg(
-            F.sum("__nc").alias("__n"),
-            F.sum(F.col("__nt") + 8 * (F.col("__nc") - 1)).alias("__sd"),
-        )
-        .select("__n", (F.col("__sd") / F.col("__n")).alias("__avgdl"))
-    )
     lex_chunks = bm25_topk(
         chunk_docs, qs, k=40, id_col="ck", score_decimals=6,
-        corpus_stats=chunk_stats)
+        corpus_stats=_hybrid_chunk_stats(docs))
     lex_docs = (
         lex_chunks
         .select("query_id", (F.col("ck") / _CHUNK_KEY_MULT)
@@ -1988,18 +2000,18 @@ def _sql_pipeline_retrieval_hybrid() -> str:
     """doc_chunks' chunk CTE feeding the bm25 pipeline at chunk
     granularity, lifted to documents by best-chunk score, fused with the
     cosine_topk oracle exactly as rrf_fuse does."""
-    m = _CHUNK_KEY_MULT
+    m, t, st = _CHUNK_KEY_MULT, _CHUNK_TOKENS, _CHUNK_STEP
     return f"""
 WITH dtoks AS (
   SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS l
   FROM documents
 ), st AS (
   SELECT doc_id, l,
-         unnest(range(1, greatest(len(l) - 40 + 32, 1) + 1, 32)) AS s
+         unnest(range(1, greatest(len(l) - {t} + {st}, 1) + 1, {st})) AS s
   FROM dtoks WHERE coalesce(len(l), 0) >= 1
 ), chunks AS (
-  SELECT doc_id * {m} + ((s - 1) // 32) AS ck,
-         list_slice(l, s, s + 39) AS cl
+  SELECT doc_id * {m} + ((s - 1) // {st}) AS ck,
+         list_slice(l, s, s + {t - 1}) AS cl
   FROM st
 ), dl AS (
   SELECT ck, coalesce(len(cl), 0) AS dl FROM chunks

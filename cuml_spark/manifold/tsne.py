@@ -243,11 +243,12 @@ class TSNE(Base):
 
     def fit_transform(self, df: DataFrame, vec_col: str = "x",
                       id_col: str = "pid") -> DataFrame:
-        pts = df.select(F.col(id_col).alias("pid"),
-                        F.col(vec_col).cast("array<double>").alias("x")).cache()
+        pts = df.select(
+            F.col(id_col).alias("pid"),
+            F.col(vec_col).cast("array<double>").alias("x"),
+        ).localCheckpoint(eager=False)
         n_rows = pts.count()
         if n_rows > self.max_driver_rows:
-            pts.unpersist()  # don't leak the cached frame on the refusal path
             raise ValueError(
                 f"TSNE.fit_transform collects the n×k edge list to the driver "
                 f"for the sequential layout stage; {n_rows} rows > "

@@ -219,10 +219,9 @@ class UMAP(Base):
                F.col(vec_col).cast("array<double>").alias("x")]
         if y_col is not None:
             sel.append(F.col(y_col).alias("y"))
-        pts = df.select(*sel).cache()
+        pts = df.select(*sel).localCheckpoint(eager=False)
         n_rows = pts.count()
         if n_rows > self.max_driver_rows:
-            pts.unpersist()  # don't leak the cached frame on the refusal path
             raise ValueError(
                 f"UMAP.fit collects the n×{self.n_neighbors} edge list to the "
                 f"driver for the sequential layout stage; {n_rows} rows > "

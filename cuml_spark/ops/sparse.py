@@ -115,8 +115,8 @@ def connected_components(
     label through the label table itself (label[label]).  The shortcut makes
     labels hop 2^r vertices after r rounds, so convergence is O(log diameter)
     rounds, not O(diameter) — a 1M-hop chain converges in ~20 rounds.
-    Converged when no label changes (checked with a count, which also
-    materializes the round and truncates the lineage chain).  Raises if
+    Converged when no label changes (checked with a count over the round's
+    checkpoint, which also fills it and truncates the lineage).  Raises if
     ``max_iter`` is exhausted before convergence — a silently split
     component would corrupt every consumer (dedup groups, DBSCAN labels).
     """
@@ -135,23 +135,22 @@ def connected_components(
     labels = (
         sym.select(F.col("a").alias("vertex")).distinct()
         .withColumn("component", F.col("vertex"))
-        .cache()
     )
-    changed = 1
-    stepped_cached = None
-    prev_cached = labels
     for it in range(max_iter):
         prop = (
             sym.join(labels.withColumnRenamed("vertex", "a"), "a")
             .groupBy(F.col("b").alias("vertex"))
             .agg(F.min("component").alias("nc"))
         )
+        # __old carries the round's input label, so the convergence count
+        # reads one frame instead of joining the previous round back in
         stepped = (
             labels.join(prop, "vertex", "left")
             .select(
                 "vertex",
                 F.least(F.col("component"),
                         F.coalesce("nc", "component")).alias("component"),
+                F.col("component").alias("__old"),
             )
         )
         if (it + 1) % 4 == 0:
@@ -160,68 +159,28 @@ def connected_components(
             # (label[label]) squares reachable path length — keeping total
             # rounds O(log diameter) for deep chains without paying the
             # self-join on the plain rounds that shallow graphs finish in
-            stepped = stepped.cache()  # read twice below (self-join)
-            stepped_cached = stepped
+            stepped = stepped.localCheckpoint(eager=False)  # read twice
             roots = stepped.select(
                 F.col("vertex").alias("component"),
                 F.col("component").alias("root"),
             )
-            new_labels = (
+            stepped = (
                 stepped.join(roots, "component", "left")
                 .select(
                     "vertex",
                     F.least(F.col("component"),
                             F.coalesce("root", "component")).alias("component"),
+                    "__old",
                 )
             )
-        else:
-            new_labels = stepped
-        # truncate lineage every THIRD round: each round references the
-        # previous label frame twice (propagation join + change count), so
-        # the analyzed plan nests ~2^rounds — a long-diameter graph (many
-        # rounds) OOMs the driver in plan analysis before any task runs.
-        # localCheckpoint replaces the plan with computed blocks; between
-        # truncations plan depth grows at most 2^3, bounded.  Plain rounds
-        # cache() instead (the convergence count below materializes either
-        # way) — checkpointing every round paid a block-write per round for
-        # no extra safety (measured 2.6s→5.5s on the 25-vertex star bench).
-        if (it + 1) % 3 == 0:
-            new_labels = new_labels.localCheckpoint()
-            new_cached = None  # checkpoint blocks live outside the CacheManager
-        else:
-            new_labels = new_labels.cache()
-            new_cached = new_labels
-        changed = (
-            new_labels.alias("n").join(labels.alias("o"), "vertex")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        if prev_cached is not None:
-            # unpersist the exact DataFrame object that was cached — calling
-            # it on a checkpointed frame is a no-op and would leak the entry
-            prev_cached.unpersist()
-        prev_cached = new_cached
-        if stepped_cached is not None:
-            # the doubling round's intermediate is consumed once new_labels
-            # materialized (the count above) — release it so peak cached
-            # storage stays at two label frames regardless of round count
-            stepped_cached.unpersist()
-            stepped_cached = None
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        if prev_cached is not None:
-            prev_cached.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(labels still changing); raise max_iter"
-        )
-    if prev_cached is not None:
-        # convergence on a non-checkpoint round leaves `labels` cache()d;
-        # returning it would leak a CacheManager entry per call (callers
-        # never unpersist). localCheckpoint the small label frame (blocks
-        # live outside the CacheManager) and release the cached one.
-        labels = labels.localCheckpoint()
-        prev_cached.unpersist()
-    return labels
+        # truncate lineage every round: the next round reads this frame
+        # twice, so an untruncated plan would nest ~2^rounds and OOM the
+        # driver in plan analysis on a long-diameter graph.  The checkpoint
+        # is lazy — the convergence count below is the job that fills it.
+        labels = stepped.localCheckpoint(eager=False)
+        if labels.filter(F.col("component") != F.col("__old")).count() == 0:
+            return labels.select("vertex", "component")
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds "
+        "(labels still changing); raise max_iter"
+    )

@@ -28,7 +28,8 @@ class LabelEncoder(Base):
         self._col: str | None = None
 
     def fit(self, df: DataFrame, col: str) -> "LabelEncoder":
-        self._dict = label_dictionary(df, col).cache()
+        # the classes_ collect below fills the checkpoint
+        self._dict = label_dictionary(df, col).localCheckpoint(eager=False)
         self.classes_ = [r["label"] for r in self._dict.orderBy("code").collect()]
         self._col = col
         return self

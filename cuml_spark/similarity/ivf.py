@@ -77,9 +77,8 @@ class IVFIndex(Base):
         self._index = (
             pts.withColumn("list_id", assign(F.col("v")))
             .repartition("list_id")  # co-locate lists → probe join shuffles once
-            .cache()
+            .localCheckpoint()
         )
-        self._index.count()
         return self
 
     def search(self, queries: DataFrame, k: int = 5, vec_col: str = "embedding",

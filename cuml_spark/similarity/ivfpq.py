@@ -109,9 +109,8 @@ class IVFPQIndex(Base):
             pts.select("vid", assign("v").alias("list_id"),
                        encode("v").alias("codes"))
             .repartition("list_id")
-            .cache()
+            .localCheckpoint()
         )
-        self._index.count()
         return self
 
     def search(self, queries: DataFrame, k: int = 5, vec_col: str = "embedding",

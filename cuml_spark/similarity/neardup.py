@@ -179,11 +179,10 @@ def near_dup_groups(pairs: DataFrame, driver_cap: int = 500_000) -> DataFrame:
     ``driver_cap`` edges it is collected ONCE (a single ``limit``-bounded
     pass, ~16 B/edge → ≤8 MB at the default cap) and grouped with
     path-compressed union-find on the driver — replacing the iterative
-    pointer-doubling loop (3 Spark jobs × O(log diameter) rounds plus an
-    eager ``localCheckpoint`` whose blocks linger in the block manager)
-    with one job.  Past the cap it falls back to the distributed weak-CC
-    prim (ops.sparse.connected_components), which scales to any edge
-    count.  Both tiers produce identical labels (min reachable id)."""
+    pointer-doubling loop (a few Spark jobs × O(log diameter) rounds, each
+    round's labels checkpointed in the block manager) with one job.  Past
+    the cap it falls back to the distributed weak-CC prim
+    (ops.sparse.connected_components), which scales to any edge count.  Both tiers produce identical labels (min reachable id)."""
     head = pairs.select("id_a", "id_b").limit(driver_cap + 1).collect()
     if len(head) <= driver_cap:
         parent: dict[int, int] = {}

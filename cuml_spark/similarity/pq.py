@@ -115,8 +115,7 @@ class PQIndex(Base):
                 codes[:, j] = d2.argmin(1)
             return pd.Series([c.tobytes() for c in codes])
 
-        self._index = pts.select("vid", encode("v").alias("codes")).cache()
-        self._index.count()
+        self._index = pts.select("vid", encode("v").alias("codes")).localCheckpoint()
         return self
 
     # ---- ADC search --------------------------------------------------

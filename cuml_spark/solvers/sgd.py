@@ -182,7 +182,7 @@ class SGD(Base):
         steps_per_job = max(1, self._FUSED_COL_CAP // group_sz)
         multi_job = (not full_batch) and self.epochs > steps_per_job
         if multi_job:
-            data = data.cache()
+            data = data.localCheckpoint(eager=False)
         w = np.zeros(d)
         b = 0.0
         state = {"eta": self.eta0, "prev_gnorm": np.inf}
@@ -226,8 +226,6 @@ class SGD(Base):
             w, b, stop = self._step_update(w, b, g, gb, t, state)
             if stop:
                 break
-        if multi_job:
-            data.unpersist()
         self.coef_ = w
         self.intercept_ = b if self.fit_intercept else 0.0
         self._cols = list(cols)
@@ -236,11 +234,11 @@ class SGD(Base):
     def _fit_per_step(self, data: DataFrame, cols: list[str], label: str) -> "SGD":
         """One aggregation job per step — the nonlinear-gradient path.
 
-        right_sized: the per-step aggregation over the cached projection is
-        task-launch-bound on a small working set (measured at sf0.1, warm:
-        hinge 12-epoch fit 2.4→1.7 s, mbsgd 8-epoch 1.7→1.4 s, accuracy
-        bit-identical; an earlier raw-coalesce attempt measured +0.6 s
-        because it serialized the cache-materialization scan — right_size
+        right_sized: the per-step aggregation over the checkpointed
+        projection is task-launch-bound on a small working set (measured at
+        sf0.1, warm: hinge 12-epoch fit 2.4→1.7 s, mbsgd 8-epoch 1.7→1.4 s,
+        accuracy bit-identical; an earlier raw-coalesce attempt measured
+        +0.6 s because it serialized the materialization scan — right_size
         sizes from Catalyst stats and never touches a big frame).  NOTE:
         ``sample`` is partition-seeded, so right-sizing changes WHICH rows
         land in each mini-batch (still a seeded Bernoulli sample; the
@@ -248,7 +246,7 @@ class SGD(Base):
         """
         from cuml_spark.core.session import right_size
 
-        data = right_size(data).cache()
+        data = right_size(data).localCheckpoint(eager=False)
         d = len(cols)
         w = np.zeros(d)
         b = 0.0
@@ -267,7 +265,6 @@ class SGD(Base):
             w, b, stop = self._step_update(w, b, g, gb, t, state)
             if stop:
                 break
-        data.unpersist()
         self.coef_ = w
         self.intercept_ = b if self.fit_intercept else 0.0
         self._cols = list(cols)

@@ -194,7 +194,7 @@ class SVC(Base):
         data = df.select(
             *[F.col(c).cast("double") for c in cols],
             F.col(label_col).cast("double").alias("__y"),
-        ).cache()
+        ).localCheckpoint(eager=False)
         n = data.count()
         lam = 1.0 / (n * self.C)  # hinge-SVM primal: λ/2‖w‖² + mean hinge
         m = self.n_rff
@@ -226,7 +226,6 @@ class SVC(Base):
             b = b - eta * gb
             if float(np.sqrt(gw @ gw + gb * gb)) < 1e-6:
                 break
-        data.unpersist()
         self._rff = (Wf, bf, scale)
         self._rff_w, self._rff_b = w, float(b)
         self.n_support_ = 0  # rff mode has no explicit SVs

@@ -111,8 +111,8 @@ def lsh_candidate_pairs(df: DataFrame, k: int = 5, text_col: str = "text",
 
     Band signature = concat of r=n_hashes/n_bands minhashes; bucket join is a
     self-join on (band, signature) — only same-bucket docs pair up.
-    Pass precomputed ``signatures`` (minhash_signatures output, e.g. cached)
-    to skip the signature pass entirely.
+    Pass precomputed ``signatures`` (minhash_signatures output, e.g.
+    checkpointed) to skip the signature pass entirely.
     """
     sig = (
         signatures if signatures is not None
@@ -188,11 +188,10 @@ def jaccard_similarity_pairs(df: DataFrame, k: int = 5, threshold: float = 0.0,
                 ).alias("hs"),
             )
             .withColumn("n_sh", F.size("hs"))
-            .cache()  # consumed twice (a-side and b-side of the pair join)
+            # eager: the pair join reads it twice (a-side and b-side) in
+            # one action, so both sides must find it already built
+            .localCheckpoint()
         )
-        packed.count()  # materialize BEFORE the dual reference — parallel
-        # subtrees of one action otherwise race past the cold cache and
-        # each recompute the shingle-hash transform
 
         @F.pandas_udf("long")
         def _inter(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -229,7 +228,8 @@ def jaccard_similarity_pairs(df: DataFrame, k: int = 5, threshold: float = 0.0,
         )
         return out.where(F.col("jaccard") >= threshold) if threshold > 0 else out
     # no candidates: all pairs sharing ≥1 shingle via the (guarded) self-join
-    sh = shingles(df, k=k, text_col=text_col, id_col=id_col).cache()
+    sh = shingles(df, k=k, text_col=text_col, id_col=id_col).localCheckpoint(
+        eager=False)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     inter = (
         sh.alias("a").join(sh.alias("b"), on="shingle")
@@ -340,8 +340,8 @@ def fuzzy_cross_contamination(
         raise ValueError(f"threshold in [0, 1], got {threshold}")
     ref_text_col = ref_text_col or text_col
     ref_id_col = ref_id_col or id_col
-    # pass corpus_signatures (minhash_signatures output, e.g. cached from
-    # the dedup pass) to skip the corpus signature pass — the one-index,
+    # pass corpus_signatures (minhash_signatures output, e.g. checkpointed
+    # by the dedup pass) to skip the corpus signature pass — the one-index,
     # many-consumers shape a real pipeline runs
     sig_c = (
         corpus_signatures if corpus_signatures is not None

@@ -147,31 +147,30 @@ def fit_bigram_lm(
     if add_k <= 0:
         raise ValueError(f"add_k must be > 0, got {add_k}")
     pairs = _bigram_rows(corpus, text_col, id_col, token_sep)
-    # persist the collapsed counts: three driver actions follow (bigram
-    # collect, context collect, vocabulary scan), and without it both
-    # count collects re-pay the corpus-scale exploded-bigram shuffle
-    bgc = pairs.groupBy("__w1", "__w2").agg(F.count("*").alias("__c"))
-    bgc = bgc.persist()
-    try:
-        ctx = bgc.groupBy("__w1").agg(F.sum("__c").alias("__cw"))
-        vocab = (
-            corpus.select(
-                F.explode(_token_array(text_col, token_sep)).alias("__w")
-            )
-            .agg(F.countDistinct("__w"))
-            .collect()[0][0]
-        ) or 0
-        take = bgc
-        if max_bigrams is not None:
-            take = bgc.orderBy(
-                F.col("__c").desc(), "__w1", "__w2"
-            ).limit(int(max_bigrams))
-        bigram_counts = {
-            (r["__w1"], r["__w2"]): r["__c"] for r in take.collect()
-        }
-        context_counts = {r["__w1"]: r["__cw"] for r in ctx.collect()}
-    finally:
-        bgc.unpersist()
+    # checkpoint the collapsed counts: both count collects read them, and
+    # without it the second re-pays the corpus-scale exploded-bigram
+    # shuffle.  The bigram collect fills the checkpoint.
+    bgc = (
+        pairs.groupBy("__w1", "__w2").agg(F.count("*").alias("__c"))
+        .localCheckpoint(eager=False)
+    )
+    ctx = bgc.groupBy("__w1").agg(F.sum("__c").alias("__cw"))
+    vocab = (
+        corpus.select(
+            F.explode(_token_array(text_col, token_sep)).alias("__w")
+        )
+        .agg(F.countDistinct("__w"))
+        .collect()[0][0]
+    ) or 0
+    take = bgc
+    if max_bigrams is not None:
+        take = bgc.orderBy(
+            F.col("__c").desc(), "__w1", "__w2"
+        ).limit(int(max_bigrams))
+    bigram_counts = {
+        (r["__w1"], r["__w2"]): r["__c"] for r in take.collect()
+    }
+    context_counts = {r["__w1"]: r["__cw"] for r in ctx.collect()}
     return BigramLM(
         bigram_counts=bigram_counts,
         context_counts=context_counts,

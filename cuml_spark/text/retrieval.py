@@ -108,6 +108,12 @@ def bm25_topk(
     summed lengths are exact integers below 2^53, so sum/count division
     is order-independent and bit-identical however they are derived.
     """
+    if corpus_stats is not None:
+        missing = [c for c in ("__n", "__avgdl") if c not in corpus_stats.columns]
+        if missing:
+            raise ValueError(
+                f"corpus_stats lacks column(s) {missing}; expected one row "
+                "of (__n, __avgdl)")
     if stopwords is not None:
         stopwords = [str(s) for s in stopwords]
 

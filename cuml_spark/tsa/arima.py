@@ -293,7 +293,8 @@ class ARIMA(Base):
             "mu double, ar array<double>, ma array<double>, sigma2 double, "
             "loglike double, aic double, bic double, nobs int, series_id string"
         )
-        self.params_ = long_df.groupBy("series_id").applyInPandas(fit_group, schema).cache()
+        self.params_ = long_df.groupBy("series_id").applyInPandas(
+            fit_group, schema).localCheckpoint(eager=False)
         self._train = long_df
         return self
 

@@ -177,8 +177,8 @@ class ExponentialSmoothing(Base):
             "series_id string, alpha double, beta double, gamma double, "
             "sse double, level double, trend double, season array<double>, nobs int"
         )
-        self.params_ = long_df.groupBy("series_id").applyInPandas(fit_group, schema)
-        self.params_ = self.params_.cache()
+        self.params_ = long_df.groupBy("series_id").applyInPandas(
+            fit_group, schema).localCheckpoint(eager=False)
         return self
 
     def _require_fit(self) -> DataFrame:

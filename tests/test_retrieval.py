@@ -345,3 +345,44 @@ def test_tfidf_keywords_partitioning_invariant(spark):
             for r in tfidf_keywords(df.repartition(parts), k=3).collect())
         assert again == base
     assert base  # non-degenerate
+
+
+def test_bm25_corpus_stats_missing_column_raises(corpus, spark):
+    """A corpus_stats frame without __avgdl fails at entry, naming the
+    column, instead of deep inside plan analysis."""
+    qs = spark.createDataFrame([(0, "apple")], "query_id long, text string")
+    stats = spark.createDataFrame([(5,)], "__n long")
+    with pytest.raises(ValueError, match="__avgdl"):
+        bm25_topk(corpus, qs, corpus_stats=stats)
+
+
+def test_hybrid_chunk_stats_equal_default_aggregate(spark, documents):
+    """The hybrid-retrieval query's closed-form chunk stats are exactly one
+    row equal to bm25_topk's default (count, avg dl) aggregate over the
+    chunked smoke corpus, so passing them changes no score."""
+    from cuml_spark.harness_text import (
+        _CHUNK_OVERLAP, _CHUNK_TOKENS, _hybrid_chunk_stats)
+    from cuml_spark.text.lm import _token_array
+
+    chunks = chunk_documents(
+        documents, _CHUNK_TOKENS, overlap=_CHUNK_OVERLAP
+    ).select(
+        (F.col("doc_id") * 100_000 + F.col("chunk_id")).alias("doc_id"),
+        F.col("chunk_text").alias("text"),
+    )
+    closed = _hybrid_chunk_stats(documents).collect()
+    default = chunks.agg(
+        F.count("*").alias("__n"),
+        F.avg(F.coalesce(F.size(_token_array("text", " ")), F.lit(0)))
+        .alias("__avgdl"),
+    ).collect()
+    assert len(closed) == 1
+    assert closed[0].asDict() == default[0].asDict()
+    assert closed[0]["__n"] > documents.count()  # some docs span 2+ chunks
+
+    qs = documents.filter(F.col("doc_id") < 4).select(
+        F.col("doc_id").alias("query_id"), "text")
+    want = sorted(tuple(r) for r in bm25_topk(chunks, qs, k=40).collect())
+    got = sorted(tuple(r) for r in bm25_topk(
+        chunks, qs, k=40, corpus_stats=_hybrid_chunk_stats(documents)).collect())
+    assert got == want and got
