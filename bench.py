@@ -36,8 +36,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 # Late-session memory pressure was the prime suspect for the r5 regressions
 # of mapInPandas-heavy queries (Python-worker churn after ~80 queries on an
-# 8g heap).  The box has 128 GiB; give the bench session real headroom.
-os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
+# 8g heap): give the bench session real headroom, within the host's RAM.
+from cuml_spark.core.session import default_driver_mem  # noqa: E402
+
+os.environ.setdefault("SPARK_DRIVER_MEM", default_driver_mem())
 
 # The r4 bench order (BENCH_r04.json), kept stable so per-query timings
 # compare like-for-like across rounds; later additions append at the end.
@@ -184,14 +186,24 @@ def _fit_line(total: float, timings: dict[str, float], sf) -> str:
                     key=lambda k: -q2[k])
     order_pref = pinned + extras
     keep = dict.fromkeys(order_pref)
+    line = build({}, len(timings))
     while len(keep) > 1:
         dropped = next(reversed(keep))
         del keep[dropped]
         q = {k: q2[k] for k in timings if k in keep}  # registry order
-        line = build(q, len(timings) - len(keep))
-        if len(line) <= _PRINT_BUDGET:
-            return line
-    return build({}, len(timings))
+        candidate = build(q, len(timings) - len(keep))
+        if len(candidate) <= _PRINT_BUDGET:
+            line = candidate
+            break
+    else:
+        keep.clear()
+    lost = [k for k in pinned if k not in keep]
+    if lost:
+        # the pinned set exists so r-over-r lines compare like-for-like;
+        # say which of it this line cannot carry
+        print(f"bench.py: printed line over {_PRINT_BUDGET} chars; dropped "
+              f"pinned queries: {', '.join(lost)}", file=sys.stderr)
+    return line
 
 
 def main() -> None:

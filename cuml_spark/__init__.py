@@ -10,7 +10,7 @@ re-expresses that surface Spark-first:
 - ``pyspark.ml`` wrappers where MLlib has the same algorithm family
   (KMeans, linear models, RF, PCA);
 - Arrow-batched ``applyInPandas`` kernels for per-group algorithms MLlib lacks
-  (time series, DBSCAN local step);
+  (time series);
 - driver-side linalg only on provably-small matrices (d×d gramians, k×d centers).
 
 Everything here is built from public knowledge only: the PySpark API plus the

@@ -46,6 +46,17 @@ def get_spark(app_name: str = "cuml_spark", shuffle_partitions: int | None = Non
     return builder.getOrCreate()
 
 
+def default_driver_mem() -> str:
+    """Driver heap for the bench and profiling scripts when
+    ``$SPARK_DRIVER_MEM`` is unset: 16g, capped at half the host's
+    physical memory so the heap never claims RAM the host lacks."""
+    try:
+        total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (OSError, ValueError):
+        return "16g"
+    return f"{max(1, min(16, total // (2 << 30)))}g"
+
+
 def _session_token(spark: SparkSession) -> str:
     """Session-unique cache-key token (ADVICE r12): ``id(spark)`` could in
     principle be reused by CPython for a NEW session object after the old
@@ -137,12 +148,10 @@ def ensure_parallelism(df, min_parts: int | None = None):
     # pickle-serialized PythonRDD wrapper (~0.15 s per call, ~40 call
     # sites × every query construction) and under AQE eagerly EXECUTES
     # any exchange stages in the plan just to learn the count (r12).
-    # javaRDD() still finalizes AQE stages; harness call sites feed
-    # scan-shaped frames (no exchanges), where it is a pure plan walk.
-    # Library entry points are the exception (ADVICE r12): DBSCAN.fit
-    # applies this to an arbitrary caller frame, where an exchange-
-    # bearing plan still triggers eager stage execution here — not a
-    # regression vs df.rdd, just not free.
+    # javaRDD() still finalizes AQE stages, so an exchange-bearing plan
+    # executes them here: call this on scan-shaped frames (the harness
+    # call sites), where it is a pure plan walk, not on a library
+    # caller's arbitrary frame.
     if df._jdf.javaRDD().getNumPartitions() < target:
         return df.repartition(target)
     return df

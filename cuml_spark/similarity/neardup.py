@@ -173,8 +173,8 @@ def near_dup_groups(pairs: DataFrame, driver_cap: int = 500_000) -> DataFrame:
     """Pairs → (vid, group_id = min reachable id): weak connected components
     over the near-dup edge list.
 
-    Two tiers, same precedent as DBSCAN's "driver union-find on component
-    representatives": the near-dup edge list is candidate-bounded by
+    Two tiers, same precedent as DBSCAN's driver union-find over core
+    sub-cells: the near-dup edge list is candidate-bounded by
     construction (LSH buckets / brute refusal caps), so up to
     ``driver_cap`` edges it is collected ONCE (a single ``limit``-bounded
     pass, ~16 B/edge → ≤8 MB at the default cap) and grouped with

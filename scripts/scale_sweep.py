@@ -20,7 +20,9 @@ import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
+from cuml_spark.core.session import default_driver_mem  # noqa: E402
+
+os.environ.setdefault("SPARK_DRIVER_MEM", default_driver_mem())
 
 SFS = ["sf0.001", "sf0.01", "sf0.1"]
 DEFAULT = [

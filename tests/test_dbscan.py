@@ -1,12 +1,17 @@
-"""DBSCAN vs a direct numpy BFS reference (exact semantics, labels compared
-as partitions — the reference's own clusters_equal contract, test/utils.py:119)."""
+"""DBSCAN vs a direct numpy BFS reference: exact semantics, full label
+vectors (clusters numbered by their lowest core id, border points take the
+min label over their core neighbours, noise −1)."""
 
 from __future__ import annotations
+
+import itertools
+import math
 
 import numpy as np
 import pytest
 
 from cuml_spark.cluster import DBSCAN
+from cuml_spark.cluster.dbscan import _SUB_CELL_MARGIN
 from cuml_spark.datasets import make_blobs
 
 
@@ -42,38 +47,68 @@ def _np_dbscan(X: np.ndarray, eps: float, min_samples: int) -> np.ndarray:
     return labels
 
 
-def _partition_sets(ids, labels):
-    by_label = {}
-    for i, l in zip(ids, labels):
-        if l != -1:
-            by_label.setdefault(l, set()).add(i)
-    return {frozenset(v) for v in by_label.values()}
-
-
-@pytest.fixture(scope="module")
-def blob_data(spark):
-    df = make_blobs(spark, n_samples=600, n_features=2, centers=4,
-                    cluster_std=0.6, random_state=12).cache()
-    pdf = df.toPandas().sort_values("id")
-    X = pdf[["f0", "f1"]].to_numpy()
-    return df, pdf["id"].to_numpy(), X
-
-
-@pytest.mark.parametrize("algorithm", ["grid", "brute"])
-def test_dbscan_matches_numpy_reference(blob_data, algorithm):
-    df, ids, X = blob_data
-    eps, ms = 0.8, 5
+def _fit_labels(spark, X: np.ndarray, eps: float, min_samples: int,
+                algorithm: str) -> np.ndarray:
+    """DBSCAN labels of the rows of ``X``, in row order (id = row index)."""
+    cols = [f"f{i}" for i in range(X.shape[1])]
+    df = spark.createDataFrame(
+        [(i, *map(float, row)) for i, row in enumerate(X)],
+        ", ".join(["id long"] + [f"{c} double" for c in cols]),
+    )
     got = (
-        DBSCAN(eps=eps, min_samples=ms, algorithm=algorithm)
-        .fit_predict(df, ["f0", "f1"], id_col="id")
+        DBSCAN(eps=eps, min_samples=min_samples, algorithm=algorithm)
+        .fit_predict(df, cols, id_col="id")
         .toPandas()
         .sort_values("id")
     )
+    np.testing.assert_array_equal(got["id"].to_numpy(), np.arange(len(X)))
+    return got["label"].to_numpy()
+
+
+def _blobs(d: int) -> np.ndarray:
+    rng = np.random.RandomState(12)
+    centers = rng.uniform(-10.0, 10.0, size=(4, d))
+    X = centers[rng.randint(0, 4, size=600)] + rng.normal(0.0, 0.6, size=(600, d))
+    return np.vstack([X, rng.uniform(-12.0, 12.0, size=(40, d))])  # sparse noise
+
+
+# eps per dimension: each case has several clusters, border points and noise
+_BLOB_EPS = {1: 0.03, 2: 0.5, 3: 0.9}
+
+
+@pytest.mark.parametrize("algorithm", ["grid", "brute"])
+@pytest.mark.parametrize("d", [1, 2, 3])
+def test_dbscan_matches_numpy_reference(spark, d, algorithm):
+    X, eps, ms = _blobs(d), _BLOB_EPS[d], 5
     ref = _np_dbscan(X, eps, ms)
-    # identical noise set
-    np.testing.assert_array_equal(got["label"].to_numpy() == -1, ref == -1)
-    # identical cluster partitions (labels up to renumbering)
-    assert _partition_sets(ids, got["label"].to_numpy()) == _partition_sets(ids, ref)
+    assert ref.max() >= 1 and (ref == -1).any()  # the case is not degenerate
+    np.testing.assert_array_equal(_fit_labels(spark, X, eps, ms, algorithm), ref)
+
+
+def _boundary_points(d: int, eps: float) -> np.ndarray:
+    side = eps / math.sqrt(d) * (1.0 - _SUB_CELL_MARGIN)
+    pts = []
+    # a chain along axis 0 whose neighbours are exactly eps apart: the
+    # inner points are core, linked only by exactly-eps edges; the ends
+    # are border points exactly eps from a core point
+    pts += [[k * eps] + [0.0] * (d - 1) for k in range(6)]
+    # a lattice whose coordinates are exact multiples of the sub-cell side
+    # (on sub-cell boundaries), at negative coordinates
+    pts += [[(i - 40) * side for i in idx]
+            for idx in itertools.product(range(3), repeat=d)]
+    # an isolated pair exactly eps apart: noise at min_samples 3
+    pts += [[20.0] * d, [20.0 + eps] + [20.0] * (d - 1)]
+    return np.array(pts)
+
+
+@pytest.mark.parametrize("algorithm", ["grid", "brute"])
+@pytest.mark.parametrize("d", [1, 2, 3])
+def test_dbscan_sub_cell_boundaries_and_exact_eps(spark, d, algorithm):
+    eps, ms = 0.5, 3
+    X = _boundary_points(d, eps)
+    ref = _np_dbscan(X, eps, ms)
+    assert ref.max() == 1 and (ref[-2:] == -1).all()
+    np.testing.assert_array_equal(_fit_labels(spark, X, eps, ms, algorithm), ref)
 
 
 def test_dbscan_separated_blobs_become_clusters(spark):
@@ -94,19 +129,3 @@ def test_dbscan_all_noise_when_eps_tiny(spark):
     df = make_blobs(spark, n_samples=200, n_features=2, centers=2, random_state=3)
     out = DBSCAN(eps=1e-9, min_samples=3).fit_predict(df, ["f0", "f1"], id_col="id")
     assert out.filter("label != -1").count() == 0
-
-
-def test_dbscan_dense_cell_guard(spark):
-    """A degenerate all-one-cell dataset past max_cell_points must refuse
-    (dense n² block) instead of OOMing the executor."""
-    import pytest
-    from pyspark.errors import PythonException
-
-    pts = [(i, 0.001 * (i % 7), 0.001 * (i % 5)) for i in range(50)]
-    df = spark.createDataFrame(pts, "pid long, x double, y double")
-    db = DBSCAN(eps=10.0, min_samples=3, max_cell_points=20)
-    with pytest.raises(PythonException, match="max_cell_points"):
-        db.fit_predict(df, ["x", "y"], "pid").collect()
-    # same data under the cap clusters fine
-    out = DBSCAN(eps=10.0, min_samples=3).fit_predict(df, ["x", "y"], "pid")
-    assert out.filter("label = 0").count() == 50

@@ -814,3 +814,31 @@ def test_audio_probe_map_only_zero_shuffle(spark):
     out = probe_audio(df)
     assert _n_shuffles(out) == 0
     assert "MapInPandas" in _plan(out)
+
+
+def test_dbscan_grid_fit_jvm_only_no_cartesian(spark, monkeypatch):
+    """The whole grid DBSCAN fit runs in the JVM: the frame it
+    checkpoints, the sub-cell graph it collects to the driver and the
+    labelled output carry no Python operator, and the pair frame is a
+    cell-key equi-join — no cartesian product or nested-loop join."""
+    from conftest import SF_UNIT
+    from cuml_spark.cluster import DBSCAN
+    from cuml_spark.harness_cluster import _points
+
+    pts = _points(spark, SF_UNIT)
+    plans = []
+    frame_cls = type(pts)
+    for name in ("localCheckpoint", "collect"):
+        def recorded(self, *args, _orig=getattr(frame_cls, name), **kwargs):
+            plans.append(_plan(self))
+            return _orig(self, *args, **kwargs)
+        monkeypatch.setattr(frame_cls, name, recorded)
+    out = DBSCAN(eps=0.35, min_samples=5).fit_predict(
+        pts, ["x1", "x2"], id_col="pid", include_role=True)
+    plans.append(_plan(out))
+    assert len(plans) == 3  # the checkpoint, the graph collect, the output
+    for plan in plans:
+        for op in ("FlatMapGroupsInPandas", "MapInPandas", "ArrowEvalPython",
+                   "BatchEvalPython", "CartesianProduct",
+                   "BroadcastNestedLoopJoin"):
+            assert op not in plan

@@ -46,3 +46,15 @@ def test_no_sibling_reuse(spark, first, second):
     alone = _jobs(spark, QUERIES[second])
     assert after_sibling == alone, (
         f"{second} ran {after_sibling} jobs after {first}, {alone} alone")
+
+
+def test_dbscan_roles_job_count(spark):
+    """The DBSCAN fit plus the roles projection runs a pinned number of
+    Spark jobs (pair join, per-point summary, one sub-cell graph collect,
+    the labelled output), so an accidental extra job fails here."""
+    from cuml_spark.core.session import read_table
+    from cuml_spark.harness import QUERIES
+
+    read_table(spark, f"{SF}/customer.parquet")  # schema inference job
+    spark.catalog.clearCache()
+    assert _jobs(spark, QUERIES["dbscan_roles"]) == 8

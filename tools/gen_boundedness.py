@@ -33,7 +33,6 @@ _FIT_TIME_PYTHON = {
     "holtwinters_forecast",
     "kpss_events",
     "svc_rule_accuracy",   # SMO on driver over Arrow-collected sample
-    "dbscan_roles", "dbscan_cluster_sizes",  # grid-cell pandas kernels
     "image_dedup_groups",  # decode+hash mapInPandas feeds a JVM groupBy
     "streaming_clean_corpus", "streaming_dedup_docs",
 }
